@@ -153,16 +153,10 @@ object Bench {
     // to a bare file scan, timing an empty plan. toRdd executes the
     // query's own physical plan, all columns included, with zero
     // driver transfer beyond partition counts.
-    def minOf2(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double =
-      (1 to 2).map { _ =>
-        clearResidue()
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).queryExecution.toRdd.count() }
-        catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }.min
-    val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    def minOf2(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame) =
+      minTime(2, clearResidue())(fn(spark, sfDir).queryExecution.toRdd.count())
+    val results =
+      scala.collection.mutable.LinkedHashMap.empty[String, Option[Double]]
     for ((name, fn) <- runOrder) {
       clearResidue()
       val c = canaryTime()
@@ -190,14 +184,14 @@ object Bench {
     val spikeThr = spikeThreshold(mainCanaries)
     if (spikeThr > 0) {
       val flagged = runOrder.filter { case (n, _) =>
-        canaryBefore(n) > spikeThr }
+        canaryBefore(n) > spikeThr && results(n).isDefined }
       for ((name, fn) <- flagged) {
         clearResidue()
         val c = canaryTime()
         canaries += c
         if (c < canaryBefore(name)) canaryBefore(name) = c
-        val t = minOf2(fn)
-        if (t < results(name)) results(name) = t
+        // a retry that throws marks the row failed, like any other run
+        results(name) = for (a <- results(name); b <- minOf2(fn)) yield a min b
         healed += 1
       }
     }
@@ -215,17 +209,14 @@ object Bench {
       val c = canaryTime()
       canaries += c
       canaryBefore("ann_codebook_fit") = c
-      results("ann_codebook_fit") = (1 to 2).map { _ =>
-        clearResidue()
-        ops.Similarity.clearCaches()
-        val t0 = System.nanoTime()
-        try ops.Similarity.prewarmCodebook(spark, sfDir)
-        catch { case _: Throwable => }
-        (System.nanoTime() - t0) / 1e9
-      }.min
+      results("ann_codebook_fit") =
+        minTime(2, { clearResidue(); ops.Similarity.clearCaches() })(
+          ops.Similarity.prewarmCodebook(spark, sfDir))
     }
-    val line = renderLine(sfDir, results.toSeq, mainCanaries,
-      canaries.toSeq, canaryBefore.toSeq, healed)
+    val line = renderLine(sfDir,
+      results.toSeq.collect { case (k, Some(t)) => (k, t) }, mainCanaries,
+      canaries.toSeq, canaryBefore.toSeq, healed,
+      failed = results.collect { case (k, None) => k }.toSeq)
     // Belt and braces: the full untruncated line also lands in the repo so
     // tools/bench_diff.py can always diff complete per-query maps.
     try java.nio.file.Files.writeString(
@@ -234,6 +225,20 @@ object Bench {
     catch { case _: Throwable => }
     println(line)
     spark.stop()
+  }
+
+  /** The fastest of `runs` timed runs of `body` in seconds, each after an
+    * untimed `prepare`. A run that throws is never published as a time:
+    * if any run fails the result is None, which the line renders as an
+    * error marker (and a line with one has no total). */
+  private[graft] def minTime(runs: Int, prepare: => Unit)(body: => Unit): Option[Double] = {
+    val times = (1 to runs).map { _ =>
+      prepare
+      val t0 = System.nanoTime()
+      try { body; Some((System.nanoTime() - t0) / 1e9) }
+      catch { case _: Throwable => None }
+    }
+    if (times.forall(_.isDefined)) Some(times.flatten.min) else None
   }
 
   /** The one output line, pure so BenchVerdictSpec pins its layout.
@@ -251,20 +256,29 @@ object Bench {
     * ≥ the summary's size preserves a complete, independently-parseable
     * verdict, and the digest lets tools/bench_diff.py authenticate the
     * committed full artifact (BENCH_FULL.json) as THIS run and recover
-    * the complete map from it. */
+    * the complete map from it.
+    *
+    * A `failed` row (a run threw) has the string "error" in place of a
+    * time in the queries map and is counted in the summary's `failed`;
+    * `rows` counts timed and failed rows. A line with a failed row has
+    * no total: `value` and the summary's `total` are null, so a query
+    * that starts throwing can never read as a speedup. */
   private[graft] def renderLine(sfDir: String,
       results: Seq[(String, Double)], mainCanaries: Seq[Double],
       allCanaries: Seq[Double], canaryBefore: Seq[(String, Double)],
-      healed: Int): String = {
+      healed: Int, failed: Seq[String] = Nil): String = {
     def r3(v: Double): String = f"$v%.3f"
-    val qs = results.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + r3(v) }
+    val qs = (results.map { case (k, v) => (k, r3(v)) } ++
+        failed.map(k => (k, "\"error\""))).sortBy(_._1)
+      .map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val total =
+      if (failed.nonEmpty) "null"
+      else r3(if (results.nonEmpty) results.map(_._2).sum else 0.0)
     // min/median/max read the MAIN-pass series (the samples interleaved
     // with the measurements — the actual load signal); the published
     // "series" keeps the heal-pass samples appended at the end for
-    // transparency (first `results.size` entries = main pass, the last
+    // transparency (the first entry per row = main pass, the last
     // `healed` = heal retries).
     val cs = mainCanaries.sorted
     val (cMin, cMed, cMax) =
@@ -297,13 +311,14 @@ object Bench {
     val digest = java.security.MessageDigest.getInstance("SHA-256")
       .digest(qs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
     val summaryJson =
-      s"""{"total":${r3(total)},"rows":${results.size},""" +
+      s"""{"total":$total,"rows":${results.size + failed.size},""" +
+        s""""failed":${failed.size},""" +
         s""""contended":$contended,"spiked_samples":$stillSpiked,""" +
         s""""healed":$healed,"spike_threshold":${r3(spikeThr)},""" +
         s""""canary_min":${r3(cMin)},"canary_median":${r3(cMed)},""" +
         s""""canary_max":${r3(cMax)},"sf":"$sfDir",""" +
         s""""queries_sha256_16":"$digest","full_path":"BENCH_FULL.json"}"""
-    s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
+    s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""sf":"$sfDir","load_canary":$canaryJson,""" +
       s""""canary_before":$cbJson,"queries":$qs,"summary":$summaryJson}"""
   }

@@ -3,7 +3,7 @@ package graft.engine
 import java.security.MessageDigest
 import java.time.LocalDate
 
-import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -37,8 +37,11 @@ final case class GraftConfig(
     maxRetries: Int = 3,
     showSql: Boolean = false,
     anonymizeHead: Boolean = false,
-    // exact df.count() per table per ask (reference shape parity; flip off
-    // at large scale to use free optimizer stats / "unknown" instead)
+    // exact row count in the prompt for a DERIVED frame (filter, join,
+    // aggregate…), paid as one df.count() scan each time the frame is
+    // described for a prompt; off, such a frame gets the free optimizer
+    // estimate or "unknown". A bare parquet scan always gets its exact
+    // count from the file footers, whatever this says.
     exactRowCount: Boolean = true,
     // generated SQL may ONLY call these functions — DEFAULT ON with the
     // curated deterministic analytics surface, matching the reference's
@@ -154,10 +157,18 @@ final class GraftSession(
     * (reference `_logs` / `last_error` parity); also attached to the
     * returned Answer. */
   @volatile var lastAttempts: Seq[Attempt] = Nil
-  val logs: mutable.ArrayBuffer[String] = mutable.ArrayBuffer.empty
+
+  // concurrent asks append here: bounded, and guarded by its own lock
+  private val logBuffer = new java.util.ArrayDeque[String]()
+
+  /** The last [[GraftSession.MaxLogEntries]] log lines, oldest first. */
+  def logs: Seq[String] = logBuffer.synchronized(logBuffer.asScala.toList)
 
   private def log(msg: String): Unit = {
-    logs += msg
+    logBuffer.synchronized {
+      logBuffer.addLast(msg)
+      if (logBuffer.size > GraftSession.MaxLogEntries) logBuffer.removeFirst()
+    }
     if (config.verbose) println(s"[graft] $msg")
   }
 
@@ -175,19 +186,25 @@ final class GraftSession(
   }
 
   /** Named-table entry point: real table names in prompts and SQL — the
-    * ergonomic superset of the reference's positional df1..dfN binding. */
+    * ergonomic superset of the reference's positional df1..dfN binding.
+    *
+    * The cache is looked up before any table is described: the key needs
+    * only the question, the view names and the schemas. A hit binds the
+    * views and runs the guard and the answer query, nothing else; the
+    * table contexts are built only for a prompt (a miss, or a cached SQL
+    * that now fails and enters the correction loop). */
   def askNamed(tables0: Seq[(String, DataFrame)], question: String): Answer = {
     val t0 = System.nanoTime()
     lastPromptId = Some(java.util.UUID.randomUUID().toString)
     lastAttempts = Nil
     try {
       tables0.foreach { case (n, df) => df.createOrReplaceTempView(n) }
-      val tables = tables0.map { case (n, df) =>
+      lazy val tables = tables0.map { case (n, df) =>
         Prompts.describe(n, df, anonymize = config.anonymizeHead,
           exactRowCount = config.exactRowCount) }
       val names = tables0.map(_._1)
 
-      val key = cacheKey(question, tables)
+      val key = cacheKey(question, tables0)
       val cached = if (config.enableCache) cache.get(key) else None
       val sql0 = cached.getOrElse(generate(question, tables))
       if (config.showSql) println(sql0)
@@ -249,7 +266,7 @@ final class GraftSession(
     * Returns the frame, the SQL that actually succeeded, and the collected
     * preview rows (so render doesn't re-execute). */
   private def run(question: String, firstSql: String,
-      tables: Seq[Prompts.TableCtx],
+      tables: => Seq[Prompts.TableCtx],
       views: Set[String]): Either[GraftError, (DataFrame, String, Array[org.apache.spark.sql.Row])] = {
     var sql = firstSql
     var lastErr = ""
@@ -303,9 +320,14 @@ final class GraftSession(
     "Unfortunately, I was not able to answer your question, " +
       s"because of the following error:\n\n$err\n"
 
-  private def cacheKey(question: String, tables: Seq[Prompts.TableCtx]): String = {
-    val fingerprint = tables.map(t => s"${t.name}:${t.head.linesIterator.take(1).mkString}")
-      .mkString("|")
+  /** MD5 of `question||name:<schema line>|…`, computed without describing.
+    * Cache files on disk are keyed by these exact bytes, so the layout must
+    * not change; `linesIterator.take(1)` keeps only the first line of a
+    * schema line whose column names contain line breaks. */
+  private def cacheKey(question: String, tables: Seq[(String, DataFrame)]): String = {
+    val fingerprint = tables.map { case (n, df) =>
+      s"$n:${Prompts.schemaLine(df.schema).linesIterator.take(1).mkString}"
+    }.mkString("|")
     MessageDigest.getInstance("MD5")
       .digest(s"$question||$fingerprint".getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
@@ -375,6 +397,9 @@ final class GraftSession(
 }
 
 object GraftSession {
+  /** How many log lines a session keeps (the oldest are dropped). */
+  val MaxLogEntries = 1000
+
   /** Thrown when the LLM response has no extractable SQL at the INITIAL
     * generation (inside the correction loop an empty extraction feeds the
     * trail instead); mapped to the typed NoSqlFound error in askNamed. */

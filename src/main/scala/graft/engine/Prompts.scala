@@ -2,7 +2,16 @@ package graft.engine
 
 import java.time.LocalDate
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader}
+import org.apache.spark.sql.types.StructType
 
 /** Prompt templates — SURVEY.md §2.1 prompt-template mapping.
   *
@@ -24,14 +33,57 @@ object Prompts {
   }
 
   /** Row count for the prompt. The reference embeds exact df.shape — O(1)
-    * in polars but a full scan in Spark. Default: use Catalyst's stats
-    * estimate when the optimizer has one (free), fall back to -1
-    * ("unknown") rather than scanning; `exact = true` forces a count for
-    * small-data reference parity. */
+    * in polars but a full scan in Spark. A frame that is a bare parquet
+    * scan (see [[footerRowCount]]) always gets its exact count from the
+    * file footers, without a Spark job. Any other (derived) frame is
+    * counted by a scan when `exact` is set (small-data reference parity);
+    * otherwise it gets Catalyst's stats estimate when the optimizer has
+    * one (free), else -1 ("unknown"). */
   def rowCount(df: DataFrame, exact: Boolean): Long =
-    if (exact) df.count()
-    else df.queryExecution.optimizedPlan.stats.rowCount
-      .map(_.longValue).getOrElse(-1L)
+    footerRowCount(df).getOrElse {
+      if (exact) df.count()
+      else df.queryExecution.optimizedPlan.stats.rowCount
+        .map(_.longValue).getOrElse(-1L)
+    }
+
+  /** Exact row count of a bare parquet scan read from the file footers:
+    * the sum of the row-group row counts over the files the frame's own
+    * file listing holds. Applies only when the optimized plan is a
+    * `LogicalRelation` over a plain parquet `HadoopFsRelation` under
+    * nothing but `Project`s — no filter, limit or anything else that
+    * could change the row count; None otherwise. A file whose footer
+    * cannot be read counts 0 rows when `ignoreCorruptFiles` is on (read
+    * option or session conf), as the scan would skip it, and throws
+    * otherwise. */
+  def footerRowCount(df: DataFrame): Option[Long] = {
+    def scan(plan: LogicalPlan): Option[HadoopFsRelation] = plan match {
+      case p: Project => scan(p.child)
+      case l: LogicalRelation if !l.isStreaming => l.relation match {
+        // exact class: subclasses (e.g. table formats with deletion
+        // vectors) may hide rows that the footers still count
+        case r: HadoopFsRelation if r.fileFormat.getClass == classOf[ParquetFileFormat] =>
+          Some(r)
+        case _ => None
+      }
+      case _ => None
+    }
+    scan(df.queryExecution.optimizedPlan).map { r =>
+      val conf = r.getHadoopConf(r.sparkSession, r.options)
+      val ignoreCorrupt = r.options.collectFirst {
+        case (k, v) if k.equalsIgnoreCase("ignoreCorruptFiles") => v.toBoolean
+      }.getOrElse(r.sparkSession.sessionState.conf.ignoreCorruptFiles)
+      def rows(f: FileStatus): Long =
+        try ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
+            ParquetMetadataConverter.NO_FILTER).getBlocks.asScala.map(_.getRowCount).sum
+        catch { case _: Exception if ignoreCorrupt => 0L }
+      r.location.listFiles(Nil, Nil).flatMap(_.files).map(f => rows(f.fileStatus)).sum
+    }
+  }
+
+  /** The schema line that heads a table's context: `name (type)` per
+    * column, joined by " | ". */
+  def schemaLine(schema: StructType): String =
+    schema.fields.map(f => s"${f.name} (${f.dataType.simpleString})").mkString(" | ")
 
   /** Render schema + first rows as text (the prompt's only schema channel).
     * Collect is bounded to `n` rows — never a full materialization.
@@ -44,8 +96,7 @@ object Prompts {
   def describe(name: String, df: DataFrame, n: Int = 5,
       anonymize: Boolean = false, exactRowCount: Boolean = true): TableCtx = {
     val fields = df.schema.fields
-    val header = fields.map(f => s"${f.name} (${f.dataType.simpleString})")
-      .mkString(" | ")
+    val header = schemaLine(df.schema)
     def mask(v: Any, rowIdx: Int): String = v match {
       case null => "null"
       case _: String => s"str_$rowIdx"

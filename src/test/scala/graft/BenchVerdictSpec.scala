@@ -122,4 +122,37 @@ class BenchVerdictSpec extends AnyFunSuite {
       .digest(qs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
     assert(got == want)
   }
+
+  test("a row that throws is never timed: error marker, no total") {
+    var runs = 0
+    assert(Bench.minTime(2, ())(runs += 1).exists(_ >= 0) && runs == 2)
+    assert(Bench.minTime(2, ())(throw new RuntimeException("boom")).isEmpty)
+    // failing on the second run alone still fails the row
+    runs = 0
+    assert(Bench.minTime(2, ()) {
+      runs += 1
+      if (runs == 2) throw new IllegalStateException("flaky")
+    }.isEmpty)
+    var prepared = 0
+    Bench.minTime(3, prepared += 1)(())
+    assert(prepared == 3, "prepare runs before every timed run")
+
+    val line = Bench.renderLine("sf0.1",
+      Seq("q_a" -> 1.5, "q_b" -> 2.0), Seq(0.2, 0.2, 0.2), Seq(0.2, 0.2, 0.2),
+      Seq("q_a" -> 0.2, "q_b" -> 0.2, "q_boom" -> 0.2), healed = 0,
+      failed = Seq("q_boom"))
+    val root = mapper.readTree(line)
+    assert(root.get("queries").get("q_boom").asText() == "error")
+    assert(root.get("queries").get("q_a").asDouble() == 1.5)
+    val summary = root.get("summary")
+    assert(root.get("value").isNull && summary.get("total").isNull,
+      "a line with a failed row publishes no total")
+    assert(summary.get("failed").asInt() == 1 && summary.get("rows").asInt() == 3)
+    // without the failure the same rows publish their sum
+    val clean = mapper.readTree(Bench.renderLine("sf0.1",
+      Seq("q_a" -> 1.5, "q_b" -> 2.0), Seq(0.2, 0.2, 0.2), Seq(0.2, 0.2, 0.2),
+      Seq("q_a" -> 0.2, "q_b" -> 0.2), healed = 0))
+    assert(math.abs(clean.get("value").asDouble() - 3.5) < 1e-9)
+    assert(clean.get("summary").get("failed").asInt() == 0)
+  }
 }

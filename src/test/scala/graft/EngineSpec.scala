@@ -838,4 +838,212 @@ class EngineSpec extends SparkSpec {
     assert(SqlExtractor.extract("Here you go:\n```sql\nSELECT 1\n```\nEnjoy!") == "SELECT 1")
     assert(SqlExtractor.extract("SELECT 1") == "SELECT 1")
   }
+
+  // ---- cache path, per-session table contexts, footer row counts
+
+  private val JobLabel = "graft.test.jobLabel"
+
+  /** Runs `body` and counts the Spark jobs it starts, by a listener that
+    * sees the job label this thread sets. A marker job run after the body
+    * is awaited, so every earlier job event has been delivered. */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val label = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(JobLabel))) match {
+          case Some(`label`) => jobs.incrementAndGet()
+          case Some(l) if l == s"$label:end" => done.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(JobLabel, label)
+      val out = body
+      sc.setLocalProperty(JobLabel, s"$label:end")
+      sc.parallelize(Seq(1), 1).count()
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.get)
+    } finally {
+      sc.setLocalProperty(JobLabel, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** freshDf written once as parquet, read back as a bare scan. */
+  private lazy val fruitPath = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_fruit").resolve("t").toString
+    freshDf.write.parquet(dir)
+    dir
+  }
+  private def fruitScan = spark.read.parquet(fruitPath)
+
+  private def md5(s: String): String = java.security.MessageDigest.getInstance("MD5")
+    .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  private def cacheFile(entries: (String, String)*): String = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val root = mapper.createObjectNode()
+    entries.foreach { case (k, v) => root.put(k, v) }
+    val f = java.nio.file.Files.createTempFile("graft_cache_key", ".json")
+    java.nio.file.Files.write(f, mapper.writeValueAsBytes(root))
+    f.toString
+  }
+
+  /** Jobs of the answer query alone, run the way an ask runs it. */
+  private def answerJobs(sql: String): Int =
+    jobsOf(spark.sql(sql).limit(21).collect())._2
+
+  test("a cache hit starts no Spark job beyond its own answer query") {
+    val sql = "SELECT fruits, count(*) AS n FROM df GROUP BY fruits ORDER BY fruits"
+    val llm = FakeLlm(s"```sql\n$sql\n```")
+    val s = new GraftSession(spark, llm)
+    assert(s.ask(fruitScan, "count by fruit").error.isEmpty)
+    val df = fruitScan
+    val (ans, askJobs) = jobsOf(s.ask(df, "count by fruit"))
+    assert(ans.error.isEmpty, ans.text)
+    assert(llm.callCount == 1, "served from the cache")
+    val want = answerJobs(sql)
+    assert(want > 0)
+    assert(askJobs == want, s"hit started $askJobs jobs, its answer query $want")
+    assert(jobsOf(Prompts.describe("df", df))._2 > 0,
+      "describing would have started jobs of its own")
+  }
+
+  test("stale cache after a schema change: renamed or retyped column misses") {
+    import org.apache.spark.sql.functions.col
+    val llm = FakeLlm("```sql\nSELECT count(*) AS n FROM df\n```")
+    val s = new GraftSession(spark, llm)
+    val q = "how many rows?"
+    assert(s.ask(freshDf, q).text == "5" && llm.callCount == 1)
+    assert(s.ask(freshDf.withColumnRenamed("b", "c"), q).text == "5")
+    assert(llm.callCount == 2, "renamed column: the LLM is asked again")
+    assert(s.ask(freshDf.withColumn("b", col("b").cast("string")), q).text == "5")
+    assert(llm.callCount == 3, "retyped column: the LLM is asked again")
+    assert(s.ask(freshDf, q).text == "5")
+    assert(llm.callCount == 3, "the original schema still hits")
+  }
+
+  test("a cache file written with the existing key formula still hits") {
+    val q1 = "how many banana rows?"
+    val q2 = "Who gets paid the most?"
+    val employees = Seq((1, "Olivia"), (2, "Noah")).toDF("EmployeeID", "Name")
+    val salaries = Seq((1, 9000L), (2, 7000L)).toDF("EmployeeID", "Salary")
+    // MD5 of question||name:<schema line>, tables joined by "|"
+    val path = cacheFile(
+      md5(s"$q1||df:a (int) | fruits (string) | b (int)") ->
+        "SELECT count(*) AS n FROM df WHERE fruits = 'banana'",
+      md5(s"$q2||df1:EmployeeID (int) | Name (string)|df2:EmployeeID (int) | Salary (bigint)") ->
+        "SELECT Name FROM df1 JOIN df2 USING (EmployeeID) ORDER BY Salary DESC LIMIT 1")
+    val llm = FakeLlm("unused")
+    val s = new GraftSession(spark, llm, GraftConfig(cachePath = Some(path)))
+    assert(s.ask(freshDf, q1).text == "3")
+    assert(s.ask(Seq(employees, salaries), q2).text == "Olivia")
+    assert(llm.callCount == 0)
+  }
+
+  test("a hit whose cached SQL now fails is corrected with the full table context") {
+    val q = "how many rows?"
+    val path = cacheFile(md5(s"$q||df:a (int) | fruits (string) | b (int)") ->
+      "SELECT raise_error('stale') AS n FROM df")
+    val llm = FakeLlm("```sql\nSELECT count(*) AS n FROM df\n```")
+    val s = new GraftSession(spark, llm, GraftConfig(cachePath = Some(path)))
+    val ans = s.ask(freshDf, q)
+    assert(ans.error.isEmpty, ans.text)
+    assert(ans.text == "5" && ans.attempts.size == 1 && llm.callCount == 1)
+    val p = llm.lastPrompt.get
+    assert(p.contains("raise_error('stale')"), "the failed cached SQL")
+    assert(p.contains("Table `df`, with 5 rows and 3 columns"))
+    assert(p.contains("a (int) | fruits (string) | b (int)"))
+    assert(p.contains("1 | banana | 5"), "the head rows")
+    assert(s.ask(freshDf, q).text == "5" && llm.callCount == 1,
+      "the corrected SQL replaced the stale entry")
+  }
+
+  test("a miss describes its tables afresh: a table changed in place shows its new count") {
+    spark.sql("DROP TABLE IF EXISTS graft_grown")
+    spark.sql("CREATE TABLE graft_grown (x INT) USING parquet")
+    try {
+      spark.sql("INSERT INTO graft_grown VALUES (1), (2)")
+      val llm = FakeLlm("```sql\nSELECT count(*) AS n FROM df\n```")
+      val s = new GraftSession(spark, llm)
+      val df = spark.table("graft_grown")
+      assert(s.ask(df, "how many rows?").text == "2")
+      assert(llm.lastPrompt.get.contains("Table `df`, with 2 rows"))
+      spark.sql("INSERT INTO graft_grown VALUES (3)")
+      // the same frame instance, its table grown by one row
+      assert(s.ask(df, "how many rows now?").text == "3")
+      assert(llm.callCount == 2, "a new question: a miss")
+      assert(llm.lastPrompt.get.contains("Table `df`, with 3 rows"),
+        "the prompt's count is the one the answer query sees")
+    } finally spark.sql("DROP TABLE IF EXISTS graft_grown")
+  }
+
+  test("logs keep the last MaxLogEntries lines under concurrent asks") {
+    // DDL is rejected by SqlGuard before any Spark work: every retry logs
+    val llm = FakeLlm("```sql\nDROP TABLE df\n```")
+    val retries = 200
+    val s = new GraftSession(spark, llm, GraftConfig(maxRetries = retries))
+    val threads = (1 to 8).map(i => new Thread(() => { s.ask(freshDf, s"drop $i"); () }))
+    threads.foreach(_.start()); threads.foreach(_.join())
+    val perAsk = retries + 2 // one line per attempt, plus "Executed in"
+    assert(8 * perAsk > GraftSession.MaxLogEntries)
+    assert(s.logs.size == GraftSession.MaxLogEntries)
+    assert(s.logs.count(_.startsWith("Executed in")) >= 1)
+    assert(s.logs.last.startsWith("Executed in"))
+  }
+
+  private def tablesAt(dir: String): Seq[(String, org.apache.spark.sql.DataFrame)] =
+    Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem",
+      "documents", "embeddings").map(t => t -> Tables(spark, dir, t)) :+
+      ("events" -> Tables.events(spark, dir))
+
+  test("footer row counts equal count() for every table at sf0.1") {
+    // the sibling of the suite's corpus at scale factor 0.1
+    val sf01 = new java.io.File(sf).getParent + "/sf0.1"
+    for ((t, df) <- tablesAt(sf01)) {
+      val (footer, jobs) = jobsOf(Prompts.footerRowCount(df))
+      assert(footer.contains(df.count()), t)
+      assert(jobs == 0, s"$t: footers are read without a Spark job")
+    }
+  }
+
+  test("footer row counts: multi-file, multi-row-group and empty parquet") {
+    val base = java.nio.file.Files.createTempDirectory("graft_footer")
+    val multi = base.resolve("multi").toString
+    spark.range(0, 5000, 1, 4).write.option("parquet.block.size", "4096").parquet(multi)
+    val files = new java.io.File(multi).listFiles().count(_.getName.endsWith(".parquet"))
+    assert(files == 4)
+    assert(Prompts.footerRowCount(spark.read.parquet(multi)).contains(5000L))
+    val empty = base.resolve("empty").toString
+    spark.range(0).write.parquet(empty)
+    assert(Prompts.footerRowCount(spark.read.parquet(empty)).contains(0L))
+    assert(spark.read.parquet(empty).count() == 0)
+  }
+
+  test("a filtered or limited frame falls back to count()") {
+    import org.apache.spark.sql.functions.col
+    val df = fruitScan
+    val filtered = df.where(col("fruits") === "apple")
+    assert(Prompts.footerRowCount(filtered).isEmpty)
+    assert(Prompts.footerRowCount(df.limit(2)).isEmpty)
+    assert(Prompts.footerRowCount(freshDf).isEmpty, "not a parquet scan")
+    assert(Prompts.rowCount(filtered, exact = true) == 2)
+    assert(Prompts.rowCount(df, exact = false) == 5, "a bare scan is exact either way")
+    assert(Prompts.footerRowCount(df.select(col("a"), col("b") * 2)).contains(5L))
+  }
+
+  test("the generated prompt carries the exact footer count") {
+    val sf01 = new java.io.File(sf).getParent + "/sf0.1"
+    val orders = Tables(spark, sf01, "orders")
+    val llm = FakeLlm("```sql\nSELECT count(*) AS n FROM orders\n```")
+    val s = new GraftSession(spark, llm, GraftConfig(exactRowCount = false))
+    val ans = s.askNamed(Seq("orders" -> orders), "how many orders?")
+    assert(llm.lastPrompt.get.contains(s"Table `orders`, with ${ans.text} rows"))
+    assert(ans.text == orders.count().toString)
+  }
 }

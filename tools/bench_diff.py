@@ -85,6 +85,8 @@ def load(path):
         queries = {m.group(1): float(m.group(2))
                    for m in re.finditer(r'"(q_\w+)":([0-9.]+)', raw)}
         cb, thr = {}, None
+    # a failed row carries "error" instead of a time
+    queries = {q: t for q, t in queries.items() if isinstance(t, (int, float))}
     return queries, cb, thr
 
 
@@ -126,7 +128,9 @@ def recover_from_summary(raw, path):
             thr = lc.get("spike_threshold")
             if thr is None and lc.get("min"):
                 thr = SPIKE_RATIO * lc["min"]
-            return d["queries"], d.get("canary_before", {}), thr
+            queries = {q: t for q, t in d["queries"].items()
+                       if isinstance(t, (int, float))}
+            return queries, d.get("canary_before", {}), thr
     # summary survived but no authenticated full artifact: keep the tail's
     # rows and at least the true threshold (no canary_before -> no
     # per-row exclusion, same as the pre-r12 fallback)

@@ -36,6 +36,8 @@ def main():
         cb = d.get("canary_before", {})
         kept = dropped = 0
         for q, t in d["queries"].items():
+            if not isinstance(t, (int, float)):  # a failed row: "error"
+                continue
             if thr is not None and cb.get(q, 0) > thr:
                 dropped += 1
                 continue
